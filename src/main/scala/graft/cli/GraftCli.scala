@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.etl.{CdmFolders, EtlFlags, FolderEtl, RiabConfig}
+import graft.etl.{CdmFolders, EtlFlags, EtlRunner, FolderEtl, RiabConfig}
 import graft.io.Zones
 import graft.model.{Cdm54, CdmModel}
 import graft.operators.{Cleanup, DqdChecks}
@@ -213,7 +213,7 @@ object GraftCli {
       folder: Path,
       flags: EtlFlags,
       model: CdmModel = Cdm54.model,
-      maxParallelTables: Int = 9): Map[String, Long] =
+      maxParallelTables: Int = EtlRunner.DefaultMaxParallelTables): Map[String, Long] =
     FolderEtl.run(s, model, zones, folder, flags, maxParallelTables)
 
   /** `--cleanup [TABLE]`: level-cascade cleanup (`cleanup.py:32-96`) —

@@ -1,25 +1,8 @@
 package graft.etl
 
+import graft.io.Jobs
 import graft.model.CdmModel
-import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 
-/** Stage-1 of the "two-stage rocket": level-barrier scheduling of per-table
-  * ETL work (`/root/reference/src/riab/etl/etl.py:82-175`).
-  *
-  * The FK-dependency DAG resolves into levels ([[CdmModel.dependencyLevels]]);
-  * tables inside one level share no FK edges, so they run in parallel —
-  * Scala `Future`s submitting concurrent Spark jobs on one SparkSession,
-  * the analogue of the reference's `ThreadPoolExecutor(max_parallel_tables
-  * = 9)` (`etl_base.py:29`). A barrier sits between levels because level
-  * N+1's FK-swap joins read the swap tables level N materialized.
-  *
-  * `onlyTables` reproduces `--table` (`etl.py:109-129`): restrict to the
-  * given tables while preserving level order. Spark's scheduler interleaves
-  * the concurrent jobs across executors; on a cluster, set a FAIR pool per
-  * level if strict sharing is wanted.
-  */
 /** The CLI restriction flags of `etl.py:109-129` / `riab.py`:
   *  - `onlyQueries`: `--only-query` — run just the named user-query files,
   *    grouped by their OMOP table (etl.py groups `Path.parts[0]`), each
@@ -54,46 +37,37 @@ final case class EtlFlags(
     else Seq("APPROVED")
 }
 
-final case class EtlRunner(model: CdmModel, maxParallelTables: Int = 9) {
+/** Stage 1 of the "two-stage rocket": per-table ETL scheduling
+  * (the reference's `src/riab/etl/etl.py:82-175`) — concurrent Spark jobs
+  * on one SparkSession, the analogue of the reference's
+  * `ThreadPoolExecutor(max_parallel_tables = 9)` (`etl_base.py:29`).
+  */
+final case class EtlRunner(
+    model: CdmModel, maxParallelTables: Int = EtlRunner.DefaultMaxParallelTables) {
 
-  /** Run `process` for every table, level by level. Returns per-table
-    * results in completion order within levels. Any failure aborts the run
-    * (fail-fast like the reference's future.result()).
-    */
-  def run[T](
-      universe: Seq[String],
-      onlyTables: Option[Set[String]] = None)(process: String => T): Map[String, T] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, maxParallelTables))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      model.dependencyLevels(universe).foldLeft(Map.empty[String, T]) { (acc, level) =>
-        val tables = level.filter(t => onlyTables.forall(_.contains(t)))
-        val futures = tables.map(t => Future(t -> process(t)))
-        // the barrier: level N+1 must not start before level N finished
-        acc ++ Await.result(Future.sequence(futures), Duration.Inf).toMap
-      }
-    } finally pool.shutdown()
-  }
-
-  /** [[runFlow]] with the level barrier dissolved into the per-table data
-    * dependencies it over-approximated. A table's `prepareTable` — user
-    * queries to the work upload, usagi/custom uploads, and the PK-swap
-    * write — reads only the raw zone and its own uploads, NEVER another
-    * table, so every prepare launches immediately and runs concurrently.
-    * The returned finalize thunk (FK rewrite, dedup, gold write) is the
-    * only phase that reads other tables' artifacts (the parents' swap
-    * tables), so each finalize is gated on exactly {own + FK-parent}
-    * prepares via future composition — no global barrier anywhere. Event
-    * steps run after all finalizes (they read gold tables); the post-ETL
-    * cleanup reads only swap tables and writes tables no finalize or
-    * event step touches (lineage map + version metadata), so it gates on
-    * all prepares and drains concurrently with the finalizes.
+  /** The full `etl.py:109-129` control flow under [[EtlFlags]], with no
+    * level barrier. `--only-query` runs the named queries table by table,
+    * `--table` the named tables, in name order; each processed table's
+    * event step follows unless `--skip-event-fks-step`.
     *
-    * On a 1000-executor run the critical path collapses from
-    * sum-over-levels to max-over-tables(prepare) + finalize — FK cycles
-    * cannot deadlock because gates wait on prepares only, and prepares
-    * wait on nothing. Restricted runs (`--table` / `--only-query`) stay
-    * sequential like [[runFlow]]'s.
+    * A full run launches every table's `prepareTable` — user queries to
+    * the work upload, usagi/custom uploads, and the PK-swap write — at
+    * once: a prepare reads only the raw zone and its own uploads, NEVER
+    * another table. The returned finalize thunk (FK rewrite, dedup, gold
+    * write) is the only phase that reads other tables' artifacts (the
+    * parents' swap tables), so each finalize is gated on exactly {own +
+    * FK-parent} prepares. Event steps run after all finalizes (they read
+    * gold tables); the post-ETL cleanup reads only swap tables and writes
+    * tables no finalize or event step touches (lineage map + version
+    * metadata), so it gates on all prepares and drains concurrently with
+    * the finalizes. It runs ONLY on a full etl (`etl.py:126-129`).
+    *
+    * The critical path is max-over-tables(prepare) + finalize, not
+    * sum-over-levels; FK cycles cannot deadlock because gates wait on
+    * prepares only, and prepares wait on nothing. All of it runs on one
+    * [[Jobs.gated]] pool of `maxParallelTables` threads: when any step
+    * fails, steps not yet started are skipped and the failure escapes
+    * only after the running ones have finished.
     */
   def runFlowPipelined[T](
       universe: Seq[String],
@@ -111,61 +85,26 @@ final case class EtlRunner(model: CdmModel, maxParallelTables: Int = 9) {
         .flatMap { case (tb, qs) => inline(tb, qs) }.toMap
     else if (flags.onlyTables.isDefined)
       flags.onlyTables.get.toSeq.sorted.flatMap(tb => inline(tb, Seq.empty)).toMap
-    else {
-      val pool = Executors.newFixedThreadPool(math.max(1, maxParallelTables))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try {
-        val universeSet = universe.toSet
-        val preps: Map[String, Future[Option[() => T]]] =
-          universe.map(t => t -> Future(prepareTable(t, Seq.empty))).toMap
-        val finals: Seq[(String, Future[Option[T]])] = universe.map { t =>
-          val gates = (model.fks(t).values.toSet.intersect(universeSet) + t).toSeq
-          t -> Future.sequence(gates.map(preps)).flatMap(_ => preps(t))
-            .map(_.map(fin => fin()))
-        }
-        val cleanupDone = Future.sequence(universe.map(preps))
-          .map(_ => postEtlCleanup()) // full etl only (`etl.py:126-129`)
-        val results =
-          finals.flatMap { case (t, f) => Await.result(f, Duration.Inf).map(t -> _) }.toMap
+    else Jobs.gated(maxParallelTables) { g =>
+      val universeSet = universe.toSet
+      val preps = universe.map(t => t -> g.start(prepareTable(t, Seq.empty))).toMap
+      val finals = universe.map { t =>
+        val parents = (model.fks(t).values.toSet.intersect(universeSet) - t).toSeq
+        g.after(preps(t) +: parents.map(preps))(ps => ps.head.map(fin => t -> fin()))
+      }
+      g.after(universe.map(preps))(_ => postEtlCleanup())
+      g.after(finals) { results =>
         if (!flags.skipEventFksStep) universe.foreach(eventStep)
-        Await.result(cleanupDone, Duration.Inf)
-        results
-      } finally pool.shutdown()
-    }
-  }
-
-  /** The full `etl.py:109-129` control flow under [[EtlFlags]]:
-    * `--only-query` runs the named queries table by table, `--table` the
-    * named tables, otherwise the whole dependency DAG; each processed
-    * table's event step follows unless `--skip-event-fks-step`; the
-    * invalid-reason cleanup runs ONLY on a full etl.
-    */
-  def runFlow[T](
-      universe: Seq[String],
-      flags: EtlFlags = EtlFlags())(
-      processTable: (String, Seq[String]) => T,
-      eventStep: String => Unit = _ => (),
-      postEtlCleanup: () => Unit = () => ()): Map[String, T] = {
-    def withEvents(tb: String, queries: Seq[String]): (String, T) = {
-      val r = processTable(tb, queries)
-      if (!flags.skipEventFksStep) eventStep(tb)
-      tb -> r
-    }
-    if (flags.onlyQueries.isDefined)
-      flags.queriesByTable.toSeq.sortBy(_._1)
-        .map { case (tb, qs) => withEvents(tb, qs) }.toMap
-    else if (flags.onlyTables.isDefined)
-      flags.onlyTables.get.toSeq.sorted.map(tb => withEvents(tb, Seq.empty)).toMap
-    else {
-      val results = run(universe)(tb => processTable(tb, Seq.empty))
-      if (!flags.skipEventFksStep) universe.foreach(eventStep)
-      postEtlCleanup() // full etl only (`etl.py:126-129`)
-      results
+        results.flatten.toMap
+      }
     }
   }
 }
 
 object EtlRunner {
+  /** `etl_base.py:29`: `ThreadPoolExecutor(max_parallel_tables = 9)`. */
+  val DefaultMaxParallelTables = 9
+
   /** Wire the runner from the riab.ini surface the way the reference CLI
     * does (`cli.py` passes `[riab] max_parallel_tables` into the ETL's
     * thread pool).

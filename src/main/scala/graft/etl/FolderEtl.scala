@@ -35,9 +35,10 @@ import scala.jdk.CollectionConverters._
   *     reference.
   *
   * Scale shape: identical to the oracle-gated `etl_two_stage` composite —
-  * swap tables are materialized parquet re-read by dependent levels (no
-  * plan grows with DAG depth), level-parallel scheduling via [[EtlRunner]],
-  * equi-joins AQE can broadcast when genuinely small.
+  * swap tables are materialized parquet re-read by dependent tables (no
+  * plan grows with DAG depth), barrier-free prepare/finalize scheduling
+  * via [[EtlRunner.runFlowPipelined]], equi-joins AQE can broadcast when
+  * genuinely small.
   */
 object FolderEtl {
 
@@ -84,7 +85,7 @@ object FolderEtl {
       zones: Zones,
       folder: Path,
       flags: EtlFlags = EtlFlags(),
-      maxParallelTables: Int = 9): Map[String, Long] = {
+      maxParallelTables: Int = EtlRunner.DefaultMaxParallelTables): Map[String, Long] = {
     registerRawViews(s, zones)
     EtlRunner(model, maxParallelTables).runFlowPipelined(model.tables, flags)(
       prepareTable = (tb, qs) => prepareTable(s, model, zones, folder, tb, qs, flags),
@@ -94,7 +95,7 @@ object FolderEtl {
 
   /** One table's barrier-relevant stage-1 prefix — user queries to the
     * work upload, usagi/custom uploads, and the append-only PK-swap WRITE
-    * (the one artifact dependent levels read). Returns the finalize thunk
+    * (the one artifact dependent tables read). Returns the finalize thunk
     * (FK rewrite through parent swaps, dedup, clustered gold write, count)
     * for [[EtlRunner.runFlowPipelined]] to drain off the critical path;
     * None when the folder holds no activated query for the table (the
@@ -176,7 +177,7 @@ object FolderEtl {
 
   /** The off-critical-path suffix: everything below reads only this
     * table's prepared frame and swap tables ALREADY materialized by
-    * prepare phases of this or earlier levels — no dependent reads it.
+    * this table's and its FK parents' prepares — no dependent reads it.
     */
   private def finalizeTable(
       s: SparkSession,

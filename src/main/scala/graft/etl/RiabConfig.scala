@@ -21,10 +21,12 @@ final case class RiabConfig(sections: Map[String, Map[String, String]]) {
   def dbEngine: String = riab.getOrElse("db_engine",
     throw new IllegalArgumentException("[riab] db_engine missing"))
   def cdmFolderPath: Option[String] = riab.get("cdm_folder_path")
-  /** `etl.py` defaults: 9 parallel tables, 16 worker threads per table. */
-  def maxParallelTables: Int = riab.get("max_parallel_tables").map(_.toInt).getOrElse(9)
-  def maxWorkerThreadsPerTable: Int =
-    riab.get("max_worker_threads_per_table").map(_.toInt).getOrElse(16)
+  /** A malformed or non-positive value falls back to the `etl.py` default.
+    * (`max_worker_threads_per_table` parses but is ignored: Spark sizes
+    * the work inside a table.)
+    */
+  def maxParallelTables: Int = graft.io.Jobs.parseCap(
+    riab.get("max_parallel_tables"), EtlRunner.DefaultMaxParallelTables)
 
   /** The selected backend's section (`[spark]`, `[bigquery]`, ...). */
   def backend: Map[String, String] = sections.getOrElse(dbEngine, Map.empty)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators._
+import graft.streaming.StreamingOps.stageStreamFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -782,28 +783,12 @@ object EventQueries {
     rm(stagingDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
     val ev = t(s, d, "events").select("event_id", "user_id", "event_type", "value")
-    def stageOne(name: String, part: org.apache.spark.sql.DataFrame,
-        mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      // STRICTLY increasing mtimes, set explicitly: the file source orders
-      // by modification time, and back-to-back writes on a coarse-mtime
-      // filesystem can tie and process in the wrong order
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
     // null-safe split: a NULL event_id must land in exactly one batch
     // (arithmetic parity would drop it from both)
     val par = coalesce(pmod(col("event_id"), lit(2)), lit(0))
     val t0 = System.currentTimeMillis()
-    stageOne("batch0.parquet", ev.filter(par === 0), t0)
-    stageOne("batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
+    stageStreamFile(s, stagingDir, "batch0.parquet", ev.filter(par === 0), t0)
+    stageStreamFile(s, stagingDir, "batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
     // threshold lookup is metadata-only — built once, reused per batch
     val thrDf = graft.operators.DqdChecks.batteryThresholds(streamDqdModel, _ => ev)
     val stream = s.readStream.schema(ev.schema)
@@ -861,23 +846,10 @@ object EventQueries {
     rm(stagingDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
     val ev = t(s, d, "events").select("event_id", "user_id", "event_type", "value", "ts")
-    def stageOne(name: String, part: org.apache.spark.sql.DataFrame,
-        mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
     val par = coalesce(pmod(col("event_id"), lit(2)), lit(0))
     val t0 = System.currentTimeMillis()
-    stageOne("batch0.parquet", ev.filter(par === 0), t0)
-    stageOne("batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
+    stageStreamFile(s, stagingDir, "batch0.parquet", ev.filter(par === 0), t0)
+    stageStreamFile(s, stagingDir, "batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(stagingDir)
     val q = stream.writeStream
@@ -951,23 +923,10 @@ object EventQueries {
     rm(stagingDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
     val ev = t(s, d, "events").select("event_id", "user_id", "event_type", "value", "ts")
-    def stageOne(name: String, part: org.apache.spark.sql.DataFrame,
-        mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
     val par = coalesce(pmod(col("event_id"), lit(2)), lit(0))
     val t0 = System.currentTimeMillis()
-    stageOne("batch0.parquet", ev.filter(par === 0), t0)
-    stageOne("batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
+    stageStreamFile(s, stagingDir, "batch0.parquet", ev.filter(par === 0), t0)
+    stageStreamFile(s, stagingDir, "batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(stagingDir)
     val q = stream.writeStream

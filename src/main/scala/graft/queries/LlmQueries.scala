@@ -1,7 +1,9 @@
 package graft.queries
 
 import graft.Tables
+import graft.io.Jobs
 import graft.ops._
+import graft.streaming.StreamingOps.stageStreamFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,9 +20,6 @@ import org.apache.spark.sql.functions._
 object LlmQueries {
   private type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
-  private def concurrently(thunks: Seq[() => Unit]): Unit =
-    graft.io.Jobs.concurrently(thunks)
 
   /** Union a drained stream's per-micro-batch zone tables (r19, ADVICE:
     * `.reduce` on an empty collection threw an opaque
@@ -164,17 +163,11 @@ object LlmQueries {
     // derived-CDM staging pool pattern): the iterative cluster map leaves
     // local[32] mostly idle between its bounded rounds, and the band/gate
     // scans fill those gaps instead of queueing behind them
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(Seq(
-        scala.concurrent.Future(clusterMap(s, d)),
-        scala.concurrent.Future(bandIndex(s, d)),
-        scala.concurrent.Future(gopherVerdicts(s, d)),
-        scala.concurrent.Future { corpusMd5(s, d); corpusBloom(s, d) })),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
+    Jobs.concurrently(Seq(
+      () => clusterMap(s, d),
+      () => bandIndex(s, d),
+      () => gopherVerdicts(s, d),
+      () => { corpusMd5(s, d); corpusBloom(s, d) }), maxParallel = 4)
     // (r19, VERDICT #4) the stored batch-1 admission verdicts are a
     // shared artifact too (both delta-growth admission entries read
     // them); built here — AFTER the stores it runs the gauntlet
@@ -376,25 +369,6 @@ object LlmQueries {
     * streamDqdRuns staging discipline). Oracle: the SAME SQL as
     * `corpus_gopher_gate` — stream == batch, row for row.
     */
-  /** Stage one single-file parquet into a stream-source directory with a
-    * pinned mtime (the streamDqdRuns staging discipline — strictly
-    * increasing mtimes drive a deterministic multi-batch drain).
-    */
-  private def stageStreamFile(s: SparkSession, stagingDir: String,
-      name: String, part: DataFrame, mtime: Long): Unit = {
-    val hconf = s.sparkContext.hadoopConfiguration
-    val tmp = s"$stagingDir/__tmp_$name"
-    part.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-    val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-    val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-    require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    fs.setTimes(dst, mtime, -1)
-    ()
-  }
-
   /** ONE staged document stream source per (JVM, dataset), shared by the
     * per-document gate streams (gopher gate, corpus admit) — each gate
     * previously re-staged its own copy of the documents table, a fixed
@@ -831,7 +805,7 @@ object LlmQueries {
     // (r21) the md5 and band delta writes are independent readers of the
     // admitted set — concurrent jobs (guide §2.6); the Bloom delta below
     // reads the md5 delta, so it stays after the barrier
-    concurrently(Seq(
+    Jobs.concurrently(Seq(
       () => zones.write(admitted1.select(md5(col("text")).as("__h")).distinct(),
         "work", s"corpus_md5_delta_b1_$key"),
       () => zones.write(
@@ -913,7 +887,7 @@ object LlmQueries {
     // store-build pool pattern, guide §2.6): sequential writes left
     // local[32] mostly idle through 12 small jobs; the per-segment Bloom
     // write stays in-segment (it reads that segment's md5 table)
-    concurrently((0 until nSegs).map { i => () =>
+    Jobs.concurrently((0 until nSegs).map { i => () =>
       val part = admitted1.filter(pmod(col("doc_id"), lit(nSegs)) === i)
       zones.write(part.select(md5(col("text")).as("__h")).distinct(),
         "work", s"delta_md5_$i")
@@ -949,7 +923,7 @@ object LlmQueries {
     // independent readers of base ∪ segments (retirement happens strictly
     // after all five land) — overlap them as concurrent jobs instead of
     // serializing five barrier-free stages
-    concurrently(Seq(
+    Jobs.concurrently(Seq(
       () => zones.write(admissionVerdictsAgainst(corpusPre, md5Pre, idxPre, b2,
         bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
           s, bloomPre, bloomWords, "__h",
@@ -1060,11 +1034,9 @@ object LlmQueries {
     // this stream CANNOT share the memoized docs source: its second
     // staged file carries AUTHORED probe docs derived from batch-1's
     // admits (the index-growth fixture)
-    def stageOne(name: String, part: DataFrame, mtime: Long): Unit =
-      stageStreamFile(s, stagingDir, name, part, mtime)
     val t0 = System.currentTimeMillis()
     val b1 = docs.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-    stageOne("batch0.parquet", b1, t0)
+    stageStreamFile(s, stagingDir, "batch0.parquet", b1, t0)
     // FIXTURE PREP (producer side): the second staged file carries the
     // same deterministic copy/variant probes as the batch entry, derived
     // from batch-1's admits — computed here only to AUTHOR the staged
@@ -1074,7 +1046,7 @@ object LlmQueries {
       .select("doc_id"), "work", "seq_b1_admits")
     val admProbe = b1.join(zones.read(s, "work", "seq_b1_admits"), "doc_id")
       .filter(size(graft.ops.TextOps.tokens(col("text"))) >= 3)
-    stageOne("batch1.parquet",
+    stageStreamFile(s, stagingDir, "batch1.parquet",
       docs.filter(col("doc_id") % 20 === 10).select("doc_id", "text")
         .unionByName(admProbe.select((col("doc_id") + 10000000L).as("doc_id"),
           concat(col("text"), lit("  ")).as("text")))
@@ -1115,7 +1087,7 @@ object LlmQueries {
         // (r21) the segment writes are independent readers of the admit
         // set — concurrent jobs (guide §2.6); the Bloom write chains
         // after the md5 write inside its thunk (it reads that table)
-        concurrently(Seq(
+        Jobs.concurrently(Seq(
           () => {
             zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
               "work", s"delta_md5_$id")
@@ -1227,7 +1199,7 @@ object LlmQueries {
             .filter(col("admitted") === 1L).select("doc_id"), "doc_id")
         // (r21) segment writes overlap as concurrent jobs (guide §2.6);
         // the Bloom write chains after the md5 write inside its thunk
-        concurrently(Seq(
+        Jobs.concurrently(Seq(
           () => {
             zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
               "work", s"delta_md5_b$id")
@@ -1246,7 +1218,7 @@ object LlmQueries {
         // MINOR COMPACTION: fold every segment into one per structure —
         // the Bloom folds by bit_or, its own associativity (r18); the
         // four structures' folds are independent (r21: concurrent jobs)
-        concurrently(Seq(
+        Jobs.concurrently(Seq(
           () => minorCompact("delta_md5_"),
           () => minorCompact("delta_band_"),
           () => minorCompact("delta_docs_"),
@@ -1993,7 +1965,7 @@ object LlmQueries {
     val (_, cents, _) = ivfStoredIndex(s, d) // shared stored centroid frame
     // (r21) base and delta assignments are independent scans — concurrent
     // jobs (guide §2.6)
-    concurrently(Seq(
+    Jobs.concurrently(Seq(
       () => zones.write(
         SimOps.ivfIndex(e.filter(col("vec_id") % 10 =!= 0), cents,
           "vec_id", "embedding"),
@@ -2028,7 +2000,7 @@ object LlmQueries {
     val (_, cents, _) = ivfStoredIndex(s, d) // shared stored centroid frame
     // (r21) the three segment assignments are independent scans —
     // concurrent jobs (guide §2.6)
-    concurrently(Seq(
+    Jobs.concurrently(Seq(
       () => zones.write(
         SimOps.ivfIndex(e.filter(col("vec_id") % 10 =!= 0), cents,
           "vec_id", "embedding"),

@@ -626,23 +626,14 @@ object OhdsiCdmQueries {
     cdmStore.getOrElseUpdate((s, d), {
       val staged = zones.listTables(s, "omop").toSet
       val todo = derivedModel.tables.filterNot(staged).toSeq
-      if (todo.nonEmpty) {
-        // the table derivations are independent of one another (the era
-        // tables re-derive their source inline), so the writes launch as
-        // CONCURRENT Spark jobs on the shared session — same pattern as
-        // EtlRunner's per-table gates. Sequential staging left local[32]
-        // mostly idle per job (~16 s of the cold battery's wall at sf0.1);
-        // a bounded pool overlaps the scans
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, todo.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(todo.map(tb =>
-            scala.concurrent.Future(zones.write(derive(s, d)(tb), "omop", tb)))),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
-      }
+      // the table derivations are independent of one another (the era
+      // tables re-derive their source inline), so the writes launch as
+      // CONCURRENT Spark jobs on the shared session — same pattern as
+      // EtlRunner's per-table gates. Sequential staging left local[32]
+      // mostly idle per job (~16 s of the cold battery's wall at sf0.1);
+      // a bounded pool overlaps the scans
+      graft.io.Jobs.concurrently(
+        todo.map(tb => () => zones.write(derive(s, d)(tb), "omop", tb)), maxParallel = 8)
     })
     tb => zones.read(s, "omop", tb)
   }
@@ -687,17 +678,8 @@ object OhdsiCdmQueries {
         "achilles_results_dist" ->
           (() => graft.operators.OhdsiAchilles.cdmCoreDistResults(derivedModel, load))
       ).filterNot { case (tb, _) => have(tb) }
-      if (todo.size > 1) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(todo.size)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(todo.map { case (tb, df) =>
-            scala.concurrent.Future(zones.write(df(), "achilles", tb))
-          }),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
-      } else todo.foreach { case (tb, df) => zones.write(df(), "achilles", tb) }
+      graft.io.Jobs.concurrently(
+        todo.map { case (tb, df) => () => zones.write(df(), "achilles", tb) }, maxParallel = 2)
     })
     (zones.read(s, "achilles", "achilles_results"),
       zones.read(s, "achilles", "achilles_results_dist"))

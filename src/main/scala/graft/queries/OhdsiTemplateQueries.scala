@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.sources.{JinjaLite, OhdsiSql}
+import graft.streaming.StreamingOps.stageStreamFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1538,18 +1539,6 @@ object OhdsiTemplateQueries {
       s"${graft.io.Zones.defaultRoot}/stream_src_pkswap_$key").getAbsolutePath
     rm(stagingDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
-    def stageOne(name: String, part: DataFrame, mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
     val wave0 = t(s, d, "nation").select(
       concat(lit("P_"), col("n_name")).as("provider_id"),
       concat(lit("SRC_"), col("n_name")).as("specialty_concept_id"))
@@ -1559,8 +1548,8 @@ object OhdsiTemplateQueries {
         concat(lit("PZ_"), col("r_name")).as("provider_id"),
         concat(lit("SRC_"), col("n_name")).as("specialty_concept_id"))
     val t0 = System.currentTimeMillis()
-    stageOne("wave0.parquet", wave0, t0)
-    stageOne("wave1.parquet", wave1, t0 + 60000L)
+    stageStreamFile(s, stagingDir, "wave0.parquet", wave0, t0)
+    stageStreamFile(s, stagingDir, "wave1.parquet", wave1, t0 + 60000L)
     stage(s, db, "provider__specialty_concept_id_usagi", t(s, d, "nation").select(
       concat(lit("SRC_"), col("n_name")).as("sourceCode"),
       (col("n_nationkey") + 100).cast("int").as("conceptId"),

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Beyond-parity streaming surface. The reference is strictly batch
@@ -12,6 +13,24 @@ import org.apache.spark.sql.functions._
   * bounded by the watermark (late data past it is dropped, state evicted).
   */
 object StreamingOps {
+
+  /** Stage one single-file parquet into a stream-source directory with a
+    * pinned mtime. The file source orders by modification time, and
+    * back-to-back writes on a coarse-mtime filesystem can tie, so callers
+    * pass STRICTLY increasing mtimes to drive a deterministic multi-batch
+    * drain (`maxFilesPerTrigger = 1`).
+    */
+  def stageStreamFile(s: SparkSession, stagingDir: String,
+      name: String, part: DataFrame, mtime: Long): Unit = {
+    val tmp = new Path(s"$stagingDir/__tmp_$name")
+    part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val fs = tmp.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val f = fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    val dst = new Path(s"$stagingDir/$name")
+    require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
+    fs.delete(tmp, true)
+    fs.setTimes(dst, mtime, -1)
+  }
 
   /** Windowed event counts with event-time watermarking — the streaming
     * analogue of the DQD per-run aggregates. Works on batch DataFrames too

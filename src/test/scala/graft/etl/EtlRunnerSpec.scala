@@ -2,55 +2,42 @@ package graft.etl
 
 import graft.model.TpchModel
 import org.scalatest.funsuite.AnyFunSuite
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
-/** Level-barrier scheduling semantics (etl.py:82-175 analogue). */
+/** Gated per-table scheduling semantics (etl.py:82-175 analogue). */
 class EtlRunnerSpec extends AnyFunSuite {
   private val m = TpchModel.model
-
-  test("every table starts only after all its FK dependencies finished (barrier)") {
-    val started = new ConcurrentHashMap[String, Long]()
-    val finished = new ConcurrentHashMap[String, Long]()
-    EtlRunner(m).run(m.tables) { t =>
-      started.put(t, System.nanoTime())
-      Thread.sleep(5)
-      finished.put(t, System.nanoTime())
-      t
-    }
-    for (t <- m.tables; (_, dep) <- m.fks(t) if dep != t)
-      assert(finished.get(dep) < started.get(t), s"$t started before its dependency $dep finished")
-  }
 
   test("tables inside one level genuinely run in parallel") {
     // customer and supplier share a level; each waits for the other to have
     // started — only possible if the runner executes them concurrently
     val latch = new CountDownLatch(2)
-    val out = EtlRunner(m, maxParallelTables = 4).run(m.tables) { t =>
-      if (t == "customer" || t == "supplier") {
-        latch.countDown()
-        assert(latch.await(10, TimeUnit.SECONDS), s"$t never saw its level peer start")
-      }
-      s"done-$t"
-    }
+    val out = EtlRunner(m, maxParallelTables = 4).runFlowPipelined(m.tables)(
+      prepareTable = (t, _) => {
+        if (t == "customer" || t == "supplier") {
+          latch.countDown()
+          assert(latch.await(10, TimeUnit.SECONDS), s"$t never saw its level peer start")
+        }
+        Some(() => s"done-$t")
+      })
     assert(out.keySet == m.tables.toSet)
     assert(out("lineitem") == "done-lineitem")
   }
 
-  test("onlyTables restricts work but preserves level order") {
+  test("onlyTables restricts work to the named tables, in name order") {
     val order = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    EtlRunner(m).run(m.tables, onlyTables = Some(Set("nation", "orders"))) { t =>
-      order.add(t); t
-    }
-    assert(order.size == 2)
-    assert(order.get(0) == "nation" && order.get(1) == "orders")
+    EtlRunner(m).runFlowPipelined(m.tables, EtlFlags(onlyTables = Some(Set("orders", "nation"))))(
+      prepareTable = (t, _) => { order.add(t); Some(() => t) })
+    assert(order.asScala.toSeq == Seq("nation", "orders"))
   }
 
   test("a failing table aborts the run") {
     intercept[RuntimeException] {
-      EtlRunner(m).run(m.tables) { t =>
+      EtlRunner(m).runFlowPipelined(m.tables)(prepareTable = (t, _) => {
         if (t == "nation") throw new RuntimeException("boom")
-        t
-      }
+        Some(() => t)
+      })
     }
   }
 
@@ -58,8 +45,8 @@ class EtlRunnerSpec extends AnyFunSuite {
     val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val flags = EtlFlags(onlyQueries = Some(Seq(
       "orders/load_a.sql", "orders/load_b.sql", "nation/load.sql")))
-    val out = EtlRunner(m).runFlow(m.tables, flags)(
-      processTable = (t, qs) => qs.sorted.mkString("+"),
+    val out = EtlRunner(m).runFlowPipelined(m.tables, flags)(
+      prepareTable = (t, qs) => Some(() => qs.sorted.mkString("+")),
       eventStep = events.add(_))
     assert(out == Map(
       "nation" -> "nation/load.sql",
@@ -67,13 +54,36 @@ class EtlRunnerSpec extends AnyFunSuite {
     assert(events.toArray.toSet == Set("nation", "orders"))
   }
 
+  test("pipelined: restricted --only-query path stays sequential with event steps") {
+    val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val steps = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val flags = EtlFlags(onlyQueries = Some(Seq(
+      "orders/load_a.sql", "orders/load_b.sql", "nation/load.sql")))
+    val out = EtlRunner(m, maxParallelTables = 4).runFlowPipelined(m.tables, flags)(
+      prepareTable = (t, qs) => {
+        steps.add(s"prepare-$t")
+        Some(() => { steps.add(s"finalize-$t"); qs.sorted.mkString("+") })
+      },
+      eventStep = t => { steps.add(s"event-$t"); events.add(t); () })
+    assert(out == Map(
+      "nation" -> "nation/load.sql",
+      "orders" -> "orders/load_a.sql+orders/load_b.sql"))
+    assert(events.toArray.toSet == Set("nation", "orders"))
+    // one table at a time, in name order, each followed by its own event step
+    assert(steps.asScala.toSeq == Seq(
+      "prepare-nation", "finalize-nation", "event-nation",
+      "prepare-orders", "finalize-orders", "event-orders"))
+  }
+
   test("--skip-event-fks-step suppresses the event step in every mode") {
     val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    EtlRunner(m).runFlow(
-      m.tables,
-      EtlFlags(onlyTables = Some(Set("region")), skipEventFksStep = true))(
-      processTable = (t, _) => t,
-      eventStep = events.add(_))
+    for (flags <- Seq(
+        EtlFlags(onlyTables = Some(Set("region"))),
+        EtlFlags(onlyQueries = Some(Seq("region/q.sql"))),
+        EtlFlags()))
+      EtlRunner(m).runFlowPipelined(m.tables, flags.copy(skipEventFksStep = true))(
+        prepareTable = (t, _) => Some(() => t),
+        eventStep = events.add(_))
     assert(events.isEmpty)
   }
 
@@ -128,28 +138,87 @@ class EtlRunnerSpec extends AnyFunSuite {
     assert(cleanups == 1)
   }
 
-  test("pipelined: restricted --only-query path stays sequential with event steps") {
-    val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val flags = EtlFlags(onlyQueries = Some(Seq(
-      "orders/load_a.sql", "orders/load_b.sql", "nation/load.sql")))
-    val out = EtlRunner(m).runFlowPipelined(m.tables, flags)(
-      prepareTable = (t, qs) => Some(() => qs.sorted.mkString("+")),
-      eventStep = events.add(_))
-    assert(out == Map(
-      "nation" -> "nation/load.sql",
-      "orders" -> "orders/load_a.sql+orders/load_b.sql"))
-    assert(events.toArray.toSet == Set("nation", "orders"))
-  }
-
   test("post-etl cleanup runs only on a FULL etl (etl.py:126-129)") {
     var cleanups = 0
     val runner = EtlRunner(m)
-    runner.runFlow(m.tables)((t, _) => t, postEtlCleanup = () => cleanups += 1)
+    def run(flags: EtlFlags): Unit = {
+      runner.runFlowPipelined(m.tables, flags)(
+        (t, _) => Some(() => t), postEtlCleanup = () => cleanups += 1)
+      ()
+    }
+    run(EtlFlags())
     assert(cleanups == 1)
-    runner.runFlow(m.tables, EtlFlags(onlyTables = Some(Set("region"))))(
-      (t, _) => t, postEtlCleanup = () => cleanups += 1)
-    runner.runFlow(m.tables, EtlFlags(onlyQueries = Some(Seq("region/q.sql"))))(
-      (t, _) => t, postEtlCleanup = () => cleanups += 1)
+    run(EtlFlags(onlyTables = Some(Set("region"))))
+    run(EtlFlags(onlyQueries = Some(Seq("region/q.sql"))))
     assert(cleanups == 1)
+  }
+
+  test("a one-thread pool runs the full flow without starving") {
+    var cleanups = 0
+    val out = EtlRunner(m, maxParallelTables = 1).runFlowPipelined(m.tables)(
+      prepareTable = (t, _) => Some(() => t),
+      postEtlCleanup = () => cleanups += 1)
+    assert(out == m.tables.map(t => t -> t).toMap)
+    assert(cleanups == 1)
+  }
+
+  /** Run the full flow with one injected failure while sibling steps are
+    * still running, then check that the failure escaped only after every
+    * step had settled: no step finishes after the exception is caught.
+    * `work` is a step that stamps its finish after `WorkMs`.
+    */
+  private val WorkMs = 300L
+  private def assertSettles(run: (() => Unit) => Unit): Unit = {
+    val finished = new ConcurrentLinkedQueue[Long]()
+    val e = intercept[IllegalStateException] {
+      run(() => { Thread.sleep(WorkMs); finished.add(System.nanoTime()); () })
+    }
+    val caught = System.nanoTime()
+    assert(e.getMessage == "injected")
+    Thread.sleep(2 * WorkMs) // a leaked sibling would finish in this window
+    assert(finished.asScala.forall(_ < caught), "a step finished after the failure escaped")
+  }
+
+  // each failing table goes FIRST in the universe: a runner that awaits
+  // tables in order and rethrows at the first failure would return while
+  // the other finalizes still run
+  private def first(t: String): Seq[String] = t +: m.tables.filterNot(_ == t)
+
+  test("a failing prepare escapes only after every running step finished") {
+    val finalizing = new CountDownLatch(1)
+    assertSettles { work =>
+      EtlRunner(m).runFlowPipelined(first("lineitem"))(prepareTable = (t, _) => {
+        if (t == "lineitem") {
+          assert(finalizing.await(10, TimeUnit.SECONDS))
+          throw new IllegalStateException("injected")
+        }
+        Some(() => { finalizing.countDown(); work() })
+      })
+      ()
+    }
+  }
+
+  test("a failing finalize escapes only after every running step finished") {
+    val finalizing = new CountDownLatch(1)
+    assertSettles { work =>
+      EtlRunner(m).runFlowPipelined(first("part"))(prepareTable = (t, _) => Some(() =>
+        if (t == "part") {
+          assert(finalizing.await(10, TimeUnit.SECONDS))
+          throw new IllegalStateException("injected")
+        } else { finalizing.countDown(); work() }))
+      ()
+    }
+  }
+
+  test("a failing cleanup escapes only after every running step finished, and no event step starts") {
+    val events = new ConcurrentLinkedQueue[String]()
+    assertSettles { work =>
+      EtlRunner(m).runFlowPipelined(m.tables)(
+        prepareTable = (_, _) => Some(work),
+        eventStep = events.add(_),
+        postEtlCleanup = () => throw new IllegalStateException("injected"))
+      ()
+    }
+    assert(events.isEmpty)
   }
 }

@@ -23,7 +23,6 @@ class RiabConfigSpec extends AnyFunSuite {
     assert(c.dbEngine === "spark")
     assert(c.cdmFolderPath === Some("~/omop-cdm/"))
     assert(c.maxParallelTables === 4)
-    assert(c.maxWorkerThreadsPerTable === 16) // reference default
     assert(c.zonesRoot === "/tmp/graft_zones")
     assert(c.backend("shuffle_partitions") === "32")
   }
@@ -43,6 +42,13 @@ class RiabConfigSpec extends AnyFunSuite {
     val c = RiabConfig.parse(example)
     assert(c.dbEngine === "bigquery")
     assert(c.backend("dataset_work") === "omop.work")
+  }
+
+  test("a malformed or non-positive max_parallel_tables falls back to the default") {
+    for (bad <- Seq("", "nine", "0", "-2"))
+      assert(RiabConfig.parse(s"[riab]\nmax_parallel_tables=$bad\n").maxParallelTables
+        === EtlRunner.DefaultMaxParallelTables, s"'$bad'")
+    assert(RiabConfig.parse("[riab]\n").maxParallelTables === EtlRunner.DefaultMaxParallelTables)
   }
 
   test("EtlRunner wires its pool size from the config") {
